@@ -145,9 +145,14 @@ def _deterministic_planes(n_planes: int, dim: int, seed: str = "lsh") -> list[li
     return planes
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a backtick-quoted identifier, embedded backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
     """Array length of ``vec_col`` probed from one row (one tiny job)."""
-    first = df.select(F.size(F.col(vec_col)).alias("d")).first()
+    first = df.select(F.size(F.col(_quoted(vec_col))).alias("d")).first()
     return int(first["d"]) if first else 0
 
 
@@ -174,7 +179,7 @@ def _bucket_col(
     if dim is None:
         dim = _vec_dim(df, vec_col)
     planes = _deterministic_planes(n_planes, dim, seed)
-    v = f"`{vec_col}`"
+    v = _quoted(vec_col)
     terms = ["CAST(0 AS BIGINT)"]
     for p, plane in enumerate(planes):
         arr = ", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane)

@@ -17,19 +17,25 @@ Semantics replicated exactly:
 - Output: ``(node string, centrality double)``, one row per interned node,
   ordered by first appearance.
 
-Spark-first design: exact Brandes is one BFS per source — embarrassingly
-parallel over sources.  Everything except the broadcast itself stays
-executor-side:
+Spark-first design: exact Brandes is one BFS per source, embarrassingly
+parallel over sources.  The adjacency must reach every executor anyway (a
+broadcast), so the exact kernel builds it on the driver from ONE bounded
+collect instead of staging it through executor-side joins:
 
-- node interning is a distributed sort + ``zipWithIndex`` (no driver
-  collect, no single-task window);
-- edge→id conversion, undirected mirroring, and multiplicity counting are
-  DataFrame joins/aggregations;
-- the adjacency reaches the driver only in compact form — one
-  ``(u, list<(v, m)>)`` row per node (``collect_list`` after the
-  multiplicity groupBy) — solely to feed ``sparkContext.broadcast``;
-- per-source dependency sums reduce with a key-partitioned sum and join
-  back to the node table distributed; the result is never collected here.
+- one executor-side ``groupBy(src, dst)`` compresses the edge rows to
+  distinct pairs with their multiplicity and first row id; a single Arrow
+  ``toPandas`` of at most ``max_broadcast_edges + 1`` rows brings them to
+  the driver;
+- interning, undirected mirroring, multiplicity sums and the CSR arrays
+  ``(indptr, indices, mult)`` are pandas/numpy on the driver; the node ids
+  are the ranks of first appearance, the same ids ``_intern`` assigns;
+- sources fan out over ``groupBy("chunk").applyInPandas``; each chunk runs
+  a vectorized multi-source Brandes over the broadcast CSR, and the
+  per-node dependency sums reduce and join back to the node table
+  distributed; the result is never collected here.
+
+``_intern`` (distributed sort + ``zipWithIndex``, joins and aggregations,
+no driver collect) serves only :func:`betweenness_centrality_distributed`.
 
 The broadcast bounds the exact kernel to graphs whose adjacency fits in
 executor memory (~10^7-10^8 edges) — the same single-machine regime as the
@@ -51,6 +57,7 @@ from __future__ import annotations
 
 import warnings
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,18 +66,30 @@ from polars_grouper_spark.plans.parallelism import local_result
 
 from polars_grouper_spark.plans.iteration import truncate_lineage
 
+# Sources per kernel batch are capped so that sources x (nodes + arcs)
+# stays under this many state cells (24 bytes each: distance, path count
+# and dependency per node; parent, child and multiplicity per DAG arc),
+# i.e. a few tens of MB per Python worker.
+_BATCH_CELLS = 1 << 20
 
-def _intern(df: DataFrame, from_col: str, to_col: str, directed: bool):
-    """Shared front-end for both kernels: first-appearance interning
-    (distributed sort + zipWithIndex) and the multiplicity-compressed pair
-    table.  Returns ``(nid_map, pair_m, n)`` — ``pair_m`` is (u, v, m)
-    after undirected mirroring; everything executor-side."""
-    spark = df.sparkSession
-    edges = df.select(
+
+def _edge_rows(df: DataFrame, from_col: str, to_col: str) -> DataFrame:
+    """``(src, dst, _i)`` with string endpoints and a row id whose order is
+    the input order; rows with a null endpoint are dropped."""
+    return df.select(
         F.col(from_col).cast("string").alias("src"),
         F.col(to_col).cast("string").alias("dst"),
         F.monotonically_increasing_id().alias("_i"),
     ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+
+
+def _intern(df: DataFrame, from_col: str, to_col: str, directed: bool):
+    """Executor-side front end of the distributed kernel: first-appearance
+    interning (distributed sort + zipWithIndex) and the multiplicity-
+    compressed pair table.  Returns ``(nid_map, pair_m, n)`` — ``pair_m``
+    is (u, v, m) after undirected mirroring."""
+    spark = df.sparkSession
+    edges = _edge_rows(df, from_col, to_col)
 
     endpoints = edges.select(
         F.explode(
@@ -103,6 +122,105 @@ def _intern(df: DataFrame, from_col: str, to_col: str, directed: bool):
         e_ids = e_ids.union(e_ids.select(F.col("v").alias("u"), F.col("u").alias("v")))
     pair_m = e_ids.groupBy("u", "v").agg(F.count(F.lit(1)).alias("m"))
     return nid_map, pair_m, n
+
+
+def _driver_csr(df: DataFrame, from_col: str, to_col: str, directed: bool,
+                max_broadcast_edges: int):
+    """Driver-side front end of the exact kernel: ONE bounded collect of
+    the distinct ``(src, dst)`` pairs, then first-appearance interning and
+    the CSR adjacency in numpy.  Returns ``(nodes, indptr, indices, mult)``
+    with ``nodes[nid]`` the node string; raises before returning anything
+    graph-sized when the mirrored pair count exceeds
+    ``max_broadcast_edges``."""
+    pairs = (
+        _edge_rows(df, from_col, to_col)
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("m"), F.min("_i").alias("_i"))
+    )
+    # One row past the bound is enough to decide the guard (mirroring never
+    # lowers the pair count), and no count job runs before the collect.
+    pdf = pairs.limit(max_broadcast_edges + 1).toPandas()
+    truncated = len(pdf) > max_broadcast_edges
+
+    # A pair's src was first seen at 2·_i and its dst at 2·_i + 1 (the
+    # ``seen`` of _intern); factorizing the endpoints in that order numbers
+    # each node by the rank of its first appearance — _intern's ids.
+    k = len(pdf)
+    i2 = 2 * pdf["_i"].to_numpy()
+    order = np.argsort(np.concatenate([i2, i2 + 1]))
+    ends = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
+    codes, nodes = pd.factorize(ends[order])
+    ids = np.empty(2 * k, dtype=np.int64)
+    ids[order] = codes
+    u, v, m = ids[:k], ids[k:], pdf["m"].to_numpy(dtype=np.float64)
+    if not directed:
+        u, v, m = np.concatenate([u, v]), np.concatenate([v, u]), np.concatenate([m, m])
+
+    n = len(nodes)
+    keys, inv = np.unique(u * n + v, return_inverse=True)
+    if len(keys) > max_broadcast_edges:
+        raise ValueError(
+            f"betweenness_centrality: graph has {'at least ' if truncated else ''}"
+            f"{len(keys):,} distinct (u, v) pairs after "
+            f"{'directed' if directed else 'undirected'} expansion, above "
+            f"max_broadcast_edges={max_broadcast_edges:,}. The Brandes "
+            "kernel broadcasts the full adjacency to every executor; a graph "
+            "this dense would exhaust driver/executor memory regardless of "
+            "source sampling. Use betweenness_centrality_distributed (no "
+            "driver/broadcast adjacency, O(diameter) rounds), reduce the "
+            "graph, or raise max_broadcast_edges if memory allows "
+            "(~50 bytes/pair)."
+        )
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(keys // n, minlength=n), out=indptr[1:])
+    return nodes, indptr, keys % n, np.bincount(inv, weights=m)
+
+
+def _brandes(indptr: np.ndarray, indices: np.ndarray, mult: np.ndarray,
+             sources: np.ndarray) -> np.ndarray:
+    """Summed Brandes dependencies of ``sources`` on every node of the CSR
+    graph (arc multiplicities ``mult`` multiply path counts).
+
+    Sources run in batches, level-synchronously: per BFS level the frontier
+    cells of every source in the batch expand their arcs at once, and the
+    arcs that land one level deeper form the shortest-path DAG, kept per
+    level for the backward pass.  Path counts are float64, as in networkx:
+    they cannot overflow where int64 would wrap (a 35x35 grid already has
+    more than 2^63 corner-to-corner shortest paths)."""
+    n = len(indptr) - 1
+    deg = np.diff(indptr)
+    cent = np.zeros(n)
+    batch = max(1, _BATCH_CELLS // (n + len(indices)))
+    for lo in range(0, len(sources), batch):
+        src = sources[lo:lo + batch]
+        roots = np.arange(len(src), dtype=np.int64) * n + src
+        dist = np.full(len(src) * n, -1, dtype=np.int64)
+        sigma = np.zeros(len(src) * n)
+        dist[roots] = 0
+        sigma[roots] = 1.0
+        dag = []
+        front, d = roots, 0
+        while front.size:
+            # Cell s*n + v is node v of the batch's s-th source; expand
+            # every frontier cell's CSR row at once.
+            v = front % n
+            k = deg[v]
+            arc = np.arange(k.sum()) + np.repeat(indptr[v] - (np.cumsum(k) - k), k)
+            parent = np.repeat(front, k)
+            child = parent - np.repeat(v, k) + indices[arc]
+            fresh = child[dist[child] < 0]
+            dist[fresh] = d + 1
+            on_dag = dist[child] == d + 1
+            parent, child, m = parent[on_dag], child[on_dag], mult[arc[on_dag]]
+            np.add.at(sigma, child, sigma[parent] * m)
+            dag.append((parent, child, m))
+            front, d = np.unique(fresh), d + 1
+        delta = np.zeros(len(src) * n)
+        for parent, child, m in reversed(dag):
+            np.add.at(delta, parent, m * sigma[parent] * ((1.0 + delta[child]) / sigma[child]))
+        delta[roots] = 0.0
+        cent += delta.reshape(len(src), n).sum(axis=0)
+    return cent
 
 
 def _finalize(nid_map: DataFrame, sums: DataFrame, n: int, scale: float,
@@ -148,44 +266,25 @@ def betweenness_centrality(
 
     Both kernels broadcast the compact adjacency to every executor, so the
     operator is bounded by adjacency size, not by source count.
-    ``max_broadcast_edges`` guards that boundary: if the graph has more
-    distinct (u, v) pairs (after undirected mirroring), the call raises
-    ``ValueError`` *before* assembling the driver-side adjacency rather
+    ``max_broadcast_edges`` guards that boundary: the driver collects at
+    most ``max_broadcast_edges + 1`` distinct (src, dst) rows, and if the
+    graph has more distinct (u, v) pairs (after undirected mirroring) the
+    call raises ``ValueError`` before any broadcast or kernel work rather
     than OOMing the driver — dense graphs can cross memory limits while
     staying under the node-count threshold.  Raise it only with driver /
     executor memory to match (~50 bytes per pair).
     """
     spark = df.sparkSession
-    nid_map, pair_m, n = _intern(df, from_col, to_col, directed)
-    empty_schema = "node string, centrality double"
-    if n == 0:
-        return spark.createDataFrame([], schema=empty_schema)
-
-    n_pairs = pair_m.count()
-    if n_pairs > max_broadcast_edges:
-        raise ValueError(
-            f"betweenness_centrality: graph has {n_pairs:,} distinct (u, v) "
-            f"pairs after {'directed' if directed else 'undirected'} expansion, "
-            f"above max_broadcast_edges={max_broadcast_edges:,}. The Brandes "
-            "kernel broadcasts the full adjacency to every executor; a graph "
-            "this dense would exhaust driver/executor memory regardless of "
-            "source sampling. Use betweenness_centrality_distributed (no "
-            "driver/broadcast adjacency, O(diameter) rounds), reduce the "
-            "graph, or raise max_broadcast_edges if memory allows "
-            "(~50 bytes/pair)."
-        )
-
-    # Compact adjacency: ONE row per node with its neighbor list — the only
-    # driver materialization, required to feed sparkContext.broadcast.
-    adj_rows = (
-        pair_m.groupBy("u")
-        .agg(F.collect_list(F.struct("v", "m")).alias("nbrs"))
-        .collect()
+    nodes, indptr, indices, mult = _driver_csr(
+        df, from_col, to_col, directed, max_broadcast_edges
     )
-    adj_lists: list[list[tuple[int, int]]] = [[] for _ in range(n)]
-    for r in adj_rows:
-        adj_lists[r["u"]] = [(x["v"], x["m"]) for x in r["nbrs"]]
-    bc_adj = spark.sparkContext.broadcast(adj_lists)
+    n = len(nodes)
+    if n == 0:
+        return spark.createDataFrame([], schema="node string, centrality double")
+    nid_map = spark.createDataFrame(
+        pd.DataFrame({"node": nodes, "nid": np.arange(n)}), schema="node string, nid long"
+    )
+    bc_csr = spark.sparkContext.broadcast((indptr, indices, mult))
 
     if sample_sources is None and n > auto_sample_threshold:
         warnings.warn(
@@ -217,43 +316,9 @@ def betweenness_centrality(
         )
 
     def brandes_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        from collections import deque
-
-        adj_local = bc_adj.value
-        nn = len(adj_local)
-        cent = [0.0] * nn
-        for source in pdf["source"]:
-            source = int(source)
-            sigma = [0] * nn
-            distv = [-1] * nn
-            preds: list[list[tuple[int, int]]] = [[] for _ in range(nn)]
-            sigma[source] = 1
-            distv[source] = 0
-            order = []
-            q = deque([source])
-            while q:
-                v = q.popleft()
-                order.append(v)
-                dv = distv[v]
-                for w, m in adj_local[v]:
-                    if distv[w] < 0:
-                        distv[w] = dv + 1
-                        q.append(w)
-                    if distv[w] == dv + 1:
-                        sigma[w] += sigma[v] * m
-                        preds[w].append((v, m))
-            delta = [0.0] * nn
-            for w in reversed(order):
-                sw = sigma[w]
-                coeff_base = (1.0 + delta[w]) / sw if sw else 0.0
-                for v, m in preds[w]:
-                    delta[v] += m * sigma[v] * coeff_base
-                if w != source:
-                    cent[w] += delta[w]
-        nz = [(i, c) for i, c in enumerate(cent) if c != 0.0]
-        if not nz:
-            return pd.DataFrame({"nid": pd.Series([], dtype="int64"), "delta": pd.Series([], dtype="float64")})
-        return pd.DataFrame({"nid": [i for i, _ in nz], "delta": [c for _, c in nz]})
+        cent = _brandes(*bc_csr.value, pdf["source"].to_numpy(dtype=np.int64))
+        nz = np.flatnonzero(cent)
+        return pd.DataFrame({"nid": nz, "delta": cent[nz]})
 
     partials = src_df.groupBy("chunk").applyInPandas(brandes_chunk, "nid long, delta double")
     sums = partials.groupBy("nid").agg(F.sum("delta").alias("s"))
@@ -290,8 +355,8 @@ def betweenness_centrality_distributed(
     State is O(S·V) rows partitioned on the node key (S = sampled source
     count); nothing graph-sized touches the driver.  Sigma counts are
     spark ``long``: graphs with > 2^63 shortest paths between a pair will
-    overflow where the in-memory kernel's Python bignums do not —
-    documented deviation, irrelevant below astronomic path counts.
+    overflow where the in-memory kernel's float64 counts do not (a 35x35
+    grid already gets there) — documented deviation.
 
     Same output contract and arithmetic as :func:`betweenness_centrality`
     (first-appearance order, duplicate-edge multiplicities, undirected

@@ -32,35 +32,43 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # ``spark.read.parquet(path)`` pays ~85 ms of driver-side work (file
 # listing + footer/schema read + relation analysis) before any job runs
 # — a fixed cost charged to EVERY query that touches a table.  Caching
-# the unresolved DataFrame handle per (SparkContext, path) removes the
+# the unresolved DataFrame handle per (session, path) removes the
 # repeat cost exactly like registering temp views once per session
 # (``register_views``) would; it caches NO data and NO results — each
-# action still scans parquet.  Keyed by applicationId so a recycled
-# session re-reads footers (schema changes across sessions are honored);
-# only the newest session's handles are retained.
+# action still scans parquet.  Keyed by the session's UUID, not the
+# application: ``newSession()`` shares the SparkContext but has its own
+# SQL conf, so it must not be handed frames bound to another session.
+# Only the newest session's handles are retained.
 _HANDLE_CACHE: dict[str, dict[str, DataFrame]] = {}
 
 
 def _cached_handle(spark: SparkSession, path: str):
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _HANDLE_CACHE:
+    session_id = spark._jsparkSession.sessionUUID()
+    if session_id not in _HANDLE_CACHE:
         _HANDLE_CACHE.clear()
-        _HANDLE_CACHE[app_id] = {}
-    return _HANDLE_CACHE[app_id], path
+        _HANDLE_CACHE[session_id] = {}
+    return _HANDLE_CACHE[session_id], path
+
+
+def _read_nanos_as_long(spark: SparkSession) -> None:
+    """events.ts is TIMESTAMP(NANOS), which Spark's vectorized reader
+    rejects; read nanos as long instead.  The conf is per session and a
+    caller may reset it, so it is set on every events access, cache hits
+    included."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        _read_nanos_as_long(spark)
     cache, key = _cached_handle(spark, path)
     hit = cache.get(key)
     if hit is not None:
         return hit
+    df = spark.read.parquet(path)
     if name == "events":
-        # events.ts is TIMESTAMP(NANOS) which Spark's vectorized reader
-        # rejects; read nanos as long and convert (micro precision).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -69,9 +77,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
             # sub-microsecond precision at 1.7e18 ns (53-bit mantissa),
             # rounding some timestamps off by 1 us vs the oracle.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        cache[key] = df
-        return df
-    df = spark.read.parquet(path)
     cache[key] = df
     return df
 
@@ -83,12 +88,12 @@ def load_raw_schema(spark: SparkSession, name: str, sf_dir: str | None = None):
     each paying a fresh ~85 ms footer read per invocation)."""
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        _read_nanos_as_long(spark)
     cache, key = _cached_handle(spark, f"schema::{path}")
     hit = cache.get(key)
     if hit is not None:
         return hit
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     cache[key] = schema
     return schema

@@ -103,8 +103,9 @@ def streaming_funnel(
         # numpy timestamp decode replaces a pd.Timestamp construction per
         # ROW (datetime64[ns].astype(int64) // 1000 is exactly
         # pd.Timestamp(ts).value // 1000), and a stable argsort on the
-        # event time replaces sort_values — identical visit order
-        # including original-order ties.
+        # raw ns event time replaces sort_values — identical visit order
+        # including original-order ties; times truncate to us only after
+        # the sort, so events within one microsecond keep their ns order.
         import numpy as np
 
         depth, last_us = state.get if state.exists else (0, None)
@@ -122,10 +123,10 @@ def streaming_funnel(
             raw = tsv.astype("int64").to_numpy()
         else:
             raw = raw.astype("datetime64[ns]").astype("int64")
-        ts_us = (raw // 1000)[mask]
+        ts_ns = raw[mask]
         ets = batch[type_col].to_numpy()[mask]
-        order = np.argsort(ts_us, kind="stable")
-        for us, et in zip(ts_us[order].tolist(), ets[order].tolist()):
+        order = np.argsort(ts_ns, kind="stable")
+        for us, et in zip((ts_ns[order] // 1000).tolist(), ets[order].tolist()):
             if depth >= n_steps:
                 break
             if et == step_list[depth] and (last_us is None or us > last_us):

@@ -348,3 +348,15 @@ def test_hard_negatives_unlabeled_anchor_yields_nothing(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     assert sim.hard_negatives(df, df.where("vec_id = 0"), k=2).count() == 0
+
+
+def test_lsh_buckets_vector_column_with_backtick(spark):
+    """A vector column whose name contains a backtick buckets exactly like
+    the same vectors under a plain name, with and without a probed dim."""
+    df = _vectors(spark)
+    odd = df.withColumnRenamed("embedding", "emb`v")
+    want = sorted(sim.hyperplane_lsh_buckets(df, n_planes=6).collect())
+    assert sorted(sim.hyperplane_lsh_buckets(odd, vec_col="emb`v", n_planes=6).collect()) == want
+    assert sorted(
+        sim.hyperplane_lsh_buckets(odd, vec_col="emb`v", n_planes=6, dim=4).collect()
+    ) == want

@@ -376,6 +376,48 @@ def test_streaming_funnel_state_across_microbatches(spark, tmp_path):
     assert final == {1: 2, 2: 1}
 
 
+def test_streaming_funnel_orders_by_ns_within_a_microsecond(spark, tmp_path):
+    """Raw nanosecond event times (the events table read nanos-as-long):
+    steps in the same microsecond but distinct nanoseconds arrive out of
+    ns order.  User 1's A is credited and its B one microsecond later
+    completes the funnel; user 2's B shares A's microsecond, so it is not
+    strictly later and the depth stays 1 (the batch funnel's semantics)."""
+    from polars_grouper_spark.streaming.stateful import streaming_funnel
+
+    us = 1_711_962_000_000_000  # 2024-04-01 09:00 UTC, in microseconds
+    rows = [
+        (1, us * 1000 + 700, "B"),
+        (1, us * 1000 + 300, "A"),
+        (1, (us + 1) * 1000 + 5, "B"),
+        (2, us * 1000 + 900, "B"),
+        (2, us * 1000 + 100, "A"),
+    ]
+    path = tmp_path / "ns_events"
+    spark.createDataFrame(rows, "user_id long, ts long, event_type string").coalesce(
+        1
+    ).write.parquet(str(path))
+    stream = spark.readStream.schema("user_id long, ts long, event_type string").parquet(
+        str(path)
+    )
+    q = (
+        streaming_funnel(stream, ["A", "B"])
+        .writeStream.format("memory")
+        .queryName("sf_ns_sink")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    final = {
+        r["user_id"]: r["depth"]
+        for r in spark.table("sf_ns_sink")
+        .groupBy("user_id")
+        .agg(F.max("depth").alias("depth"))
+        .collect()
+    }
+    assert final == {1: 2, 2: 1}
+
+
 def test_streaming_funnel_batch_delegates(spark):
     import datetime as dt
 
